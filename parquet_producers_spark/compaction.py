@@ -40,12 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .encoder import (
-    CHUNK_ARROW_SCHEMA,
-    CHUNK_ROWS,
-    decode_chunks,
-    encode_partitions,
-)
+from .encoder import CHUNK_ROWS, chunk_ident, decode_chunks, encode_partitions
 
 
 def compact_chunks(
@@ -71,10 +66,7 @@ def compact_chunks(
     datasets are key-sorted sets — reference SURVEY.md §1.1 — and every
     consumer already merges on key).
     """
-    layout_cols = [
-        c for c in chunks.columns
-        if c not in {f.name for f in CHUNK_ARROW_SCHEMA}
-    ]
+    layout_cols = chunk_ident(chunks)[:-2]
     if layout_cols:
         raise ValueError(
             f"compact_chunks operates on one stored table; layout columns "
@@ -141,8 +133,7 @@ def compact_stage(
     from pyspark.sql import functions as F
 
     from .storage import (
-        SliceResult,
-        atomic_write_json,
+        commit_slices,
         manifest_path,
         read_chunks,
         slice_status,
@@ -165,7 +156,7 @@ def compact_stage(
 
     done, todo = slice_status(root, stage, new_version, n_slices, store)
 
-    per_slice: dict[int, dict] = {}
+    elapsed_s = 0.0
     if todo:
         import time
 
@@ -212,40 +203,10 @@ def compact_stage(
         )
         elapsed_s = time.monotonic() - t0
 
-        written = spark.read.parquet(out_dir).filter(
-            F.col("slice_id").isin([int(k) for k in todo]))
-        tots = {
-            int(r["slice_id"]): r
-            for r in written.groupBy("slice_id").agg(
-                F.sum(F.when(F.col("col_idx") == 0, F.col("n_rows"))
-                      .otherwise(F.lit(0))).alias("rows"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("enc_bytes").alias("enc_bytes"),
-                F.countDistinct("part_id", "chunk_seq").alias("n_chunks"),
-            ).collect()
-        }
-        for k in todo:
-            tot = tots.get(k)
-            per_slice[k] = {
-                "rows": int(tot["rows"] or 0) if tot else 0,
-                "raw_bytes": int(tot["raw_bytes"] or 0) if tot else 0,
-                "enc_bytes": int(tot["enc_bytes"] or 0) if tot else 0,
-                "n_chunks": int(tot["n_chunks"] or 0) if tot else 0,
-                "elapsed_s": round(elapsed_s / len(todo), 3),
-            }
-            atomic_write_json(manifest_path(root, stage, new_version, k), {
-                "stage": stage, "version": new_version, "slice": k,
-                "slice_of": n_slices, "slice_col": slice_col,
-                "sort_cols": sort_cols, "chunk_rows": chunk_rows,
-                "compacted_from": version,
-                "metrics": per_slice[k],
-            }, store=store)
-
-    return [
-        SliceResult(k, True, done[k]) if k in done
-        else SliceResult(k, False, per_slice[k])
-        for k in range(n_slices)
-    ]
+    lineage = {"slice_col": slice_col, "sort_cols": sort_cols,
+               "chunk_rows": chunk_rows, "compacted_from": version}
+    return commit_slices(spark, root, stage, new_version, n_slices, done,
+                         todo, elapsed_s, lineage, store)
 
 
 def compact_if_needed(

@@ -12,7 +12,8 @@ row-group buffered append; MergeSorter.cs:25-69 — external sort):
    encodes every column with the stats-selected codec — all numpy/Arrow
    kernel work, zero per-row Python;
 3. the output is a *chunk table*: one row per (chunk, column) with the
-   encoded blob, codec id, JSON params and size metrics. Written as
+   encoded blob, codec id, JSON params and size metrics, with the
+   decoded schema carried as field metadata on ``data``. Written as
    Parquet (uncompressed — our codecs own compression) it is this
    engine's at-rest format.
 
@@ -57,11 +58,31 @@ CHUNK_ARROW_SCHEMA = pa.schema([
     ("data", pa.large_binary()),
 ])
 
-CHUNK_SPARK_SCHEMA = (
-    "part_id int, chunk_seq int, col_idx int, column string, codec string, params string,"
-    " n_rows long, raw_bytes long, enc_bytes long,"
-    " key_min string, key_max string, col_min string, col_max string, data binary"
-)
+# field-metadata key on the chunk table's ``data`` column: the decoded
+# schema as a JSON list of [column, arrow type name] pairs in col_idx
+# order. Spark's parquet writer keeps field metadata in the footer, so
+# readers learn the schema from the frame itself (see chunk_fields)
+SCHEMA_META_KEY = "pps.schema"
+
+
+def _chunk_schema(columns: list[tuple[str, str]] | None,
+                  slice_col: bool = False):
+    """Spark schema of the chunk table, with the decoded ``columns``
+    attached to ``data`` (none when the input schema is unknown)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    st = from_arrow_schema(CHUNK_ARROW_SCHEMA)
+    if columns:
+        st["data"].metadata = {SCHEMA_META_KEY: json.dumps(columns)}
+    return st.add("slice_id", "integer") if slice_col else st
+
+
+def chunk_ident(chunks: DataFrame) -> list[str]:
+    """A chunk's identity: any layout columns (slice_id, enc_version,
+    …) + (part_id, chunk_seq)."""
+    names = set(CHUNK_ARROW_SCHEMA.names)
+    return [c for c in chunks.columns if c not in names] + [
+        "part_id", "chunk_seq"]
 
 
 def _col_zone(arr: pa.Array) -> tuple[str | None, str | None]:
@@ -264,7 +285,8 @@ def encode_partitions(
         df = df.repartition(partitions)
 
     key_col = key_col or (sort_cols[0] if sort_cols else None)
-    out_schema = CHUNK_SPARK_SCHEMA + (", slice_id int" if slice_col else "")
+    out_schema = _chunk_schema(_arrow_columns(df, slice_col),
+                               slice_col=bool(slice_col))
 
     def _with_slice(rb: pa.RecordBatch, slice_val) -> pa.RecordBatch:
         if slice_col is None:
@@ -339,6 +361,16 @@ def encode_partitions(
             yield from flush(final=True)
 
     return df.mapInArrow(enc, schema=out_schema)
+
+
+def _arrow_columns(df: DataFrame, drop: str | None):
+    """[column, arrow type name] of ``df`` as its Arrow batches reach the
+    encode kernel — derived on the driver from the Spark schema (the
+    JVM's Spark→Arrow mapping, mirrored by pyspark)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return [(f.name, str(to_arrow_type(f.dataType)))
+            for f in df.schema if f.name != drop]
 
 
 def open_parquet_any(path: str):
@@ -467,7 +499,61 @@ def encode_files(
                                         key_col, profile)
                     seq += 1
 
-    return fdf.mapInArrow(enc, schema=CHUNK_SPARK_SCHEMA)
+    # the decoded schema is the first file's footer schema — a driver
+    # metadata read, not a Spark job
+    columns = ([(f.name, str(f.type))
+                for f in open_parquet_any(files[0]).schema_arrow]
+               if files else None)
+    return fdf.mapInArrow(enc, schema=_chunk_schema(columns))
+
+
+def chunk_fields(chunks: DataFrame) -> list[pa.Field]:
+    """The decoded schema of a chunk frame, in col_idx order, read from
+    the ``data`` column's field metadata that every encoder attaches —
+    driver-side, no Spark job. Frames without it (stores written before
+    the schema was carried) fall back to one probe job over the chunk
+    manifest; blobs are projected away first, since over a checkpointed
+    frame the probe would otherwise re-scan the data bytes."""
+    from pyspark.sql import functions as F
+
+    meta = chunks.schema["data"].metadata.get(SCHEMA_META_KEY)
+    if meta is not None:
+        pairs = json.loads(meta)
+    else:
+        pairs = [
+            (r["column"], json.loads(r["params"])["atype"])
+            for r in chunks.drop("data").groupBy("col_idx", "column")
+            .agg(F.first("params").alias("params"))
+            .orderBy("col_idx").collect()
+        ]
+        if not pairs:
+            raise ValueError("empty chunk table")
+    return [pa.field(name, _arrow_type(t)) for name, t in pairs]
+
+
+def _decode_chunk(tin: pa.Table, rows, schema: pa.Schema) -> pa.Table:
+    """THE per-chunk decode kernel every reader shares: decode one
+    chunk's column rows ``rows`` of ``tin`` (blob + params each; the
+    loop is over ≤ n_cols metadata rows, never data rows) into a table
+    of ``schema``, returned in the types Spark expects back over the
+    Arrow boundary (:func:`emit_schema`)."""
+    colc, datac, parc = (tin.column("column"), tin.column("data"),
+                         tin.column("params"))
+    arrays = {
+        colc[i].as_py(): decode_array(datac[i].as_py(),
+                                      json.loads(parc[i].as_py()))
+        for i in rows
+    }
+    if arrays.keys() != set(schema.names):
+        # e.g. waves written before and after an added column, unioned:
+        # the frame carries one wave's schema, so decoding the other's
+        # chunks against it would silently drop or miss columns
+        raise ValueError(
+            f"chunk columns {sorted(arrays)} differ from the frame's "
+            f"decoded schema {schema.names}")
+    tbl = pa.table([arrays[n] for n in schema.names], schema=schema)
+    emit = emit_schema(list(schema))
+    return tbl if emit == schema else tbl.cast(emit)
 
 
 def decode_chunks(chunks: DataFrame, ordered: bool = False,
@@ -475,52 +561,27 @@ def decode_chunks(chunks: DataFrame, ordered: bool = False,
     """Inverse of :func:`encode_partitions`: chunk table → original rows.
 
     Chunks are decoded group-wise; all columns of one chunk travel
-    together. ``ordered=True`` re-sorts by (part_id, chunk_seq) so the
-    global row order of the sorted encode is reproduced — this is a TOTAL
-    SORT of the decoded output and therefore the expensive path at scale;
-    it defaults off. Consumers that need at-rest order re-sort by their
-    own key (as compaction already does, compaction.py:69-74).
+    together. The output schema comes from the ``data`` column's field
+    metadata (:func:`chunk_fields`), so building this frame runs no
+    Spark job; only stores written before that metadata existed pay a
+    schema-probe job. ``ordered=True`` re-sorts by (part_id, chunk_seq)
+    so the global row order of the sorted encode is reproduced — this is
+    a TOTAL SORT of the decoded output and therefore the expensive path
+    at scale; it defaults off. Consumers that need at-rest order re-sort
+    by their own key (as compaction already does, compaction.py:69-74).
 
     ``_pandas_boundary`` is a MEASUREMENT COMPARATOR, not a supported
-    path: it runs the identical per-chunk kernels but crosses the
+    path: it runs the identical per-chunk kernel but crosses the
     executor boundary via ``applyInPandas`` (blobs arrive as a pandas
     frame, the decoded Arrow table leaves through ``.to_pandas()``) —
     the pre-Arrow-native shape this function had before the
     ``applyInArrow`` rewrite. ``bench.py``'s decode probe times both
     to put a number on that rewrite's win; nothing else should set it.
     """
-    from pyspark.sql import functions as F
-
-    # recover the original column schema from the stored arrow type
-    # names — blobs projected away first: over a checkpointed chunk
-    # frame this job would otherwise re-scan the full data bytes
-    # (checkpoint rows are materialized whole; pruning can't skip them)
-    heads = (
-        chunks.drop("data").groupBy("col_idx", "column")
-        .agg(F.first("params").alias("params"))
-        .orderBy("col_idx")
-        .collect()
-    )
-    if not heads:
-        raise ValueError("empty chunk table")
-    fields = [
-        pa.field(r["column"], _arrow_type(json.loads(r["params"])["atype"]))
-        for r in heads
-    ]
-    # a chunk is identified by (any layout partition cols, part_id, chunk_seq)
-    layout_cols = [
-        c for c in chunks.columns
-        if c not in {f.name for f in CHUNK_ARROW_SCHEMA}
-    ]
-    group_cols = layout_cols + ["part_id", "chunk_seq"]
-    out_schema = pa.schema(
-        [pa.field("__ord", pa.int64())] + fields
-    )
-    out_emit = emit_schema(list(out_schema))
+    data_schema = pa.schema(chunk_fields(chunks))
     spark_schema = ", ".join(
-        ["__ord long"] + [f"{f.name} {_spark_type(f.type)}" for f in fields]
-    )
-    col_names = [f.name for f in fields]
+        ["__ord long"]
+        + [f"{f.name} {_spark_type(f.type)}" for f in data_schema])
 
     def dec(key, tin):
         # ARROW-NATIVE grouped decode (applyInArrow): blobs arrive and
@@ -528,36 +589,24 @@ def decode_chunks(chunks: DataFrame, ordered: bool = False,
         # in either direction
         import numpy as np
 
-        def _py(v):
-            return v.as_py() if hasattr(v, "as_py") else v
-
         # dense per-chunk ordinal: layout cols are small ints (slice ids)
         ordv = 0
         for k in key:
-            ordv = ordv * 1_000_000 + int(_py(k))
-        arrays = {}
-        colc, datac, parc = (tin.column("column"), tin.column("data"),
-                             tin.column("params"))
-        for i in range(tin.num_rows):  # ≤ n_cols rows, not data rows
-            arrays[_py(colc[i])] = decode_array(
-                _py(datac[i]), json.loads(_py(parc[i]))
-            )
-        n = len(next(iter(arrays.values())))
-        cols = [pa.array(np.full(n, ordv, np.int64))]
-        cols += [arrays[c] for c in col_names]
-        tbl = pa.table(cols, schema=out_schema)
-        return tbl if out_schema == out_emit else tbl.cast(out_emit)
+            ordv = ordv * 1_000_000 + int(k.as_py() if hasattr(k, "as_py")
+                                          else k)
+        tbl = _decode_chunk(tin, range(tin.num_rows), data_schema)
+        return tbl.add_column(
+            0, "__ord", pa.array(np.full(tbl.num_rows, ordv, np.int64)))
 
+    grouped = chunks.groupBy(*chunk_ident(chunks))
     if _pandas_boundary:
         def dec_pd(key, pdf):
             tin = pa.Table.from_pandas(pdf, preserve_index=False)
             return dec(key, tin).to_pandas()
 
-        out = chunks.groupBy(*group_cols).applyInPandas(
-            dec_pd, schema=spark_schema)
+        out = grouped.applyInPandas(dec_pd, schema=spark_schema)
     else:
-        out = chunks.groupBy(*group_cols).applyInArrow(
-            dec, schema=spark_schema)
+        out = grouped.applyInArrow(dec, schema=spark_schema)
     if ordered:
         out = out.orderBy("__ord")
     return out.drop("__ord")
@@ -638,10 +687,17 @@ def project_chunks(chunks: DataFrame, columns: list[str]) -> DataFrame:
     """Column pruning on the encoded format: keep only the requested
     columns' chunk rows — blobs of other columns are never read past
     the parquet row-group filter (the chunk table's analogue of
-    ``ReadSchema`` pruning)."""
+    ``ReadSchema`` pruning). The decoded schema carried on ``data`` is
+    narrowed to the kept columns."""
     from pyspark.sql import functions as F
 
-    return chunks.filter(F.col("column").isin(columns))
+    out = chunks.filter(F.col("column").isin(columns))
+    meta = chunks.schema["data"].metadata.get(SCHEMA_META_KEY)
+    if meta is None:
+        return out
+    keep = set(columns)
+    kept = [p for p in json.loads(meta) if p[0] in keep]
+    return out.withMetadata("data", {SCHEMA_META_KEY: json.dumps(kept)})
 
 
 def prune_chunks(chunks: DataFrame, key_lo: str | None = None,
@@ -688,11 +744,7 @@ def prune_chunks_on(chunks: DataFrame, column: str, lo=None, hi=None,
         stats = stats.filter(F.col("col_max").cast(cast) >= lo)
     if hi is not None:
         stats = stats.filter(F.col("col_min").cast(cast) <= hi)
-    layout_cols = [
-        c for c in chunks.columns
-        if c not in {f.name for f in CHUNK_ARROW_SCHEMA}
-    ]
-    ident = layout_cols + ["part_id", "chunk_seq"]
+    ident = chunk_ident(chunks)
     return chunks.join(stats.select(*ident).distinct(), ident, "left_semi")
 
 
@@ -719,11 +771,7 @@ def prune_chunks_eq(chunks: DataFrame, column: str, value) -> DataFrame:
     happen (crc32 double-hashing is process-stable)."""
     from pyspark.sql import functions as F
 
-    layout_cols = [
-        c for c in chunks.columns
-        if c not in {f.name for f in CHUNK_ARROW_SCHEMA}
-    ]
-    ident = layout_cols + ["part_id", "chunk_seq"]
+    ident = chunk_ident(chunks)
     # probe a NARROW manifest projection (identity + params only): the
     # blobs must never ship JVM→Python just to read their params JSON
     stats = chunks.filter(F.col("column") == column).select(*ident, "params")

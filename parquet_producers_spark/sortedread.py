@@ -60,7 +60,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .encoder import CHUNK_ARROW_SCHEMA, _arrow_type, _spark_type
+from .encoder import _spark_type, chunk_ident
 
 # Above this many chunks, cut selection runs distributed (see
 # plan_key_ranges). Mirrors the inline-vs-sharded manifest threshold
@@ -71,14 +71,6 @@ PLAN_COLLECT_THRESHOLD = 32768
 # rows most recently materialized onto the driver by plan_key_ranges —
 # pinned by tests to prove planning collects O(ranges), not O(chunks)
 LAST_PLAN_COLLECTED = 0
-
-
-def _ident_cols(chunks: DataFrame) -> list[str]:
-    """A chunk's identity: any layout columns (slice_id, enc_version,
-    …) + (part_id, chunk_seq) — same rule decode_chunks uses."""
-    layout = [c for c in chunks.columns
-              if c not in {f.name for f in CHUNK_ARROW_SCHEMA}]
-    return layout + ["part_id", "chunk_seq"]
 
 
 def _zone_sql_type(key_spark_type: str) -> str | None:
@@ -151,7 +143,7 @@ def plan_key_ranges(
     default (scalar cuts) is unchanged."""
     global LAST_PLAN_COLLECTED
     spark = chunks.sparkSession
-    ident = _ident_cols(chunks)
+    ident = chunk_ident(chunks)
     cast_t = key_type or "string"
     zones = (
         chunks.groupBy(*ident)
@@ -310,31 +302,24 @@ def read_sorted(
     moves compressed chunk blobs clustered by ``range_id`` — decoded
     rows never shuffle. Each range decodes + merges wholly inside its
     group task, then ``sortWithinPartitions`` orders without an
-    exchange (ranges are already whole in their partition)."""
-    import json
+    exchange (ranges are already whole in their partition).
 
+    The decoded schema comes from the ``data`` column's field metadata
+    (:func:`~.encoder.chunk_fields`), with no Spark job; only stores
+    written before that metadata existed pay a schema-probe job."""
     import pyarrow as pa
 
-    from .encoder import decode_array, emit_schema
+    from .encoder import _decode_chunk, _emit_type, chunk_fields, emit_schema
 
     spark = chunks.sparkSession
-    # planning runs 3-4 metadata jobs; over a checkpointed chunk frame
+    fields = chunk_fields(chunks)
+    # planning runs 2-3 metadata jobs; over a checkpointed chunk frame
     # each would re-scan the full BLOB bytes (checkpoint rows are
     # materialized whole — column pruning can't skip the data column).
     # One slim projection pays that scan once; every planning job after
     # it reads metadata-only rows. The MAIN plan below still builds on
     # ``chunks`` directly, so the one-blob-exchange shape is unchanged.
     meta = chunks.drop("data").localCheckpoint(eager=False)
-    heads = (
-        meta.groupBy("col_idx", "column")
-        .agg(F.first("params").alias("params"))
-        .orderBy("col_idx")
-        .collect()
-    )
-    fields = [
-        pa.field(r["column"], _arrow_type(json.loads(r["params"])["atype"]))
-        for r in heads
-    ]
     col_names = [f.name for f in fields]
     if key not in col_names:
         raise ValueError(f"key column {key!r} not in store ({col_names})")
@@ -370,7 +355,7 @@ def read_sorted(
     # known upgrade path if that regime ever becomes real.
     ranges = plan_key_ranges(meta, n_ranges, key_type=zone_t,
                              tiebreak=True)
-    ident = _ident_cols(chunks)
+    ident = chunk_ident(chunks)
 
     # assignment = broadcast theta-join of the chunk rows against the
     # tiny range list on zone overlap (chunk [key_min,key_max] ∩ range
@@ -432,13 +417,14 @@ def read_sorted(
     # of each range onto one task, which reassembles every overlapping
     # chunk, bound-filters, and concatenates the runs
     data_schema = pa.schema(fields)
-    out_schema = pa.schema([pa.field("range_id", pa.int32())] + fields)
-    out_emit = emit_schema(list(out_schema))
+    emit = emit_schema(fields)
     spark_schema = ", ".join(
         ["range_id int"]
         + [f"{f.name} {_spark_type(f.type)}" for f in fields])
     as_string = zone_t is None and not pa.types.is_string(key_arrow) \
         and not pa.types.is_large_string(key_arrow)
+    # the shared kernel returns emit-typed tables: bounds compare there
+    cmp_t = pa.string() if as_string else _emit_type(key_arrow)
 
     def dec(gkey, tin):
         # ARROW-NATIVE grouped decode (applyInArrow): blobs arrive and
@@ -448,36 +434,19 @@ def read_sorted(
         import numpy as np
         import pyarrow.compute as pc
 
-        def _py(v):
-            return v.as_py() if hasattr(v, "as_py") else v
-
         # gkey = (__route, range_id, lo, lo_tb, hi, hi_tb)
-        rid = int(_py(gkey[1]))
-        lo, lo_tb = _py(gkey[2]), _py(gkey[3])
-        hi, hi_tb = _py(gkey[4]), _py(gkey[5])
+        rid, lo, lo_tb, hi, hi_tb = (v.as_py() for v in gkey[1:])
         # group the ≤ (chunks × columns) METADATA rows by chunk ident —
         # the loop never touches data rows
-        ident_cols = [tin.column(c) for c in ident]
-        tbc = tin.column("__tb")
+        idents = zip(*(tin.column(c).to_pylist() for c in ident))
         by_chunk: dict[tuple, list[int]] = {}
-        chunk_tb: dict[tuple, int] = {}
-        for i in range(tin.num_rows):
-            ck = tuple(_py(c[i]) for c in ident_cols)
+        for i, ck in enumerate(idents):
             by_chunk.setdefault(ck, []).append(i)
-            chunk_tb[ck] = _py(tbc[i])
-        colc, datac, parc = (tin.column("column"), tin.column("data"),
-                             tin.column("params"))
-        cmp_t = pa.string() if as_string else key_arrow
+        tbs = tin.column("__tb").to_pylist()
         tables = []
-        for ck, rows in by_chunk.items():
-            ctb = chunk_tb[ck]
-            arrays = {
-                _py(colc[i]): decode_array(
-                    _py(datac[i]), json.loads(_py(parc[i])))
-                for i in rows
-            }
-            tbl = pa.table([arrays[c] for c in col_names],
-                           schema=data_schema)
+        for rows in by_chunk.values():
+            ctb = tbs[rows[0]]
+            tbl = _decode_chunk(tin, rows, data_schema)
             ks = tbl.column(key)
             if as_string:
                 ks = pc.cast(ks, pa.string())
@@ -517,12 +486,9 @@ def read_sorted(
                     pc.is_null(ks), below_hi()))
             if tbl.num_rows:
                 tables.append(tbl)
-        data = (pa.concat_tables(tables) if tables
-                else data_schema.empty_table())
-        cols = [pa.array(np.full(data.num_rows, rid, np.int32))]
-        cols += [data.column(c) for c in col_names]
-        tbl = pa.table(cols, schema=out_schema)
-        return tbl if out_schema == out_emit else tbl.cast(out_emit)
+        data = pa.concat_tables(tables) if tables else emit.empty_table()
+        return data.add_column(
+            0, "range_id", pa.array(np.full(data.num_rows, rid, np.int32)))
 
     out = fat.groupBy("__route", "range_id", "lo", "lo_tb",
                       "hi", "hi_tb").applyInArrow(dec, schema=spark_schema)

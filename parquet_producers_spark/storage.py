@@ -87,6 +87,54 @@ def slice_status(root: str, stage: str, version: int, n_slices: int,
     return done, [k for k in range(n_slices) if k not in done]
 
 
+def commit_slices(spark: SparkSession, root: str, stage: str,
+                  version: int, n_slices: int, done: dict[int, dict],
+                  todo: list[int], elapsed_s: float, lineage: dict,
+                  store: FileStore | None = None) -> list[SliceResult]:
+    """Commit the freshly written ``todo`` slices of ``stage`` v=N — the
+    manifest step shared by encode_run and compaction.compact_stage.
+
+    Per-slice metrics come from ONE ``groupBy(slice_id, codec)``
+    aggregation over the written chunk rows (schema given, so no
+    inference job), rolled up per slice on the driver: ``rows``,
+    ``raw_bytes``, ``enc_bytes``, ``n_chunks`` (= rows with
+    ``col_idx == 0``), ``by_codec`` (enc bytes per codec) and
+    ``elapsed_s`` (the write's time, shared evenly). Then one atomic
+    manifest per slice, carrying ``lineage``. Returns every slice's
+    result, those skipped as ``done`` included."""
+    from .encoder import _chunk_schema
+
+    is_head = F.col("col_idx") == 0
+    rows = (
+        spark.read.schema(_chunk_schema(None, slice_col=True))
+        .parquet(stage_dir(root, stage, version, "chunks"))
+        .filter(F.col("slice_id").isin([int(k) for k in todo]))
+        .groupBy("slice_id", "codec")
+        .agg(F.sum(F.when(is_head, F.col("n_rows")).otherwise(F.lit(0)))
+             .alias("rows"),
+             F.sum("raw_bytes").alias("raw_bytes"),
+             F.sum("enc_bytes").alias("enc_bytes"),
+             F.sum(is_head.cast("long")).alias("n_chunks"))
+        .collect()
+    ) if todo else []
+    per_slice = {k: {"rows": 0, "raw_bytes": 0, "enc_bytes": 0,
+                     "n_chunks": 0, "by_codec": {},
+                     "elapsed_s": round(elapsed_s / len(todo), 3)}
+                 for k in todo}
+    for r in rows:
+        m = per_slice[int(r["slice_id"])]
+        for key in ("rows", "raw_bytes", "enc_bytes", "n_chunks"):
+            m[key] += int(r[key] or 0)
+        m["by_codec"][r["codec"]] = int(r["enc_bytes"] or 0)
+    for k in todo:
+        atomic_write_json(manifest_path(root, stage, version, k), {
+            "stage": stage, "version": version, "slice": k,
+            "slice_of": n_slices, **lineage, "metrics": per_slice[k],
+        }, store=store)
+    return [SliceResult(k, k in done, done[k] if k in done else per_slice[k])
+            for k in range(n_slices)]
+
+
 def encode_run(
     spark: SparkSession,
     df: DataFrame,
@@ -116,16 +164,16 @@ def encode_run(
     granularity bounds re-work after a failure without driver-side
     bookkeeping per task.
     """
-    from .encoder import encode_partitions
+    from .encoder import CHUNK_ROWS, encode_partitions
 
     store = store or _DEFAULT_STORE
     slice_col = slice_col or sort_cols[0]
+    chunk_rows = chunk_rows or CHUNK_ROWS
     out_dir = stage_dir(root, stage, version, "chunks")
 
     done, todo = slice_status(root, stage, version, n_slices, store)
 
     elapsed_s = 0.0
-    per_slice: dict[int, dict] = {}
     if todo:
         t0 = time.monotonic()
         sliced = df.withColumn(
@@ -135,12 +183,10 @@ def encode_run(
         n_parts = (
             partitions_per_slice * len(todo) if partitions_per_slice else None
         )
-        from .encoder import CHUNK_ROWS
-
         chunks = encode_partitions(
             sliced, sort_cols=sort_cols, partitions=n_parts,
             cascade=cascade, profile=profile, slice_col="__slice",
-            chunk_rows=chunk_rows or CHUNK_ROWS,
+            chunk_rows=chunk_rows,
         )
         (
             chunks.write.mode("overwrite")
@@ -151,48 +197,12 @@ def encode_run(
         )
         elapsed_s = time.monotonic() - t0
 
-        written = spark.read.parquet(out_dir).filter(
-            F.col("slice_id").isin([int(k) for k in todo]))
-        tots = {
-            int(r["slice_id"]): r
-            for r in written.groupBy("slice_id").agg(
-                F.sum(F.when(F.col("col_idx") == 0, F.col("n_rows"))
-                      .otherwise(F.lit(0))).alias("rows"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("enc_bytes").alias("enc_bytes"),
-            ).collect()
-        }
-        codec_rows = written.groupBy("slice_id", "codec").agg(
-            F.sum("enc_bytes").alias("enc")).collect()
-        by_codec: dict[int, dict] = {}
-        for r in codec_rows:
-            by_codec.setdefault(int(r["slice_id"]), {})[r["codec"]] = int(r["enc"])
-        for k in todo:
-            tot = tots.get(k)
-            per_slice[k] = {
-                "rows": int(tot["rows"] or 0) if tot else 0,
-                "raw_bytes": int(tot["raw_bytes"] or 0) if tot else 0,
-                "enc_bytes": int(tot["enc_bytes"] or 0) if tot else 0,
-                "by_codec": by_codec.get(k, {}),
-                "elapsed_s": round(elapsed_s / len(todo), 3),
-            }
-            atomic_write_json(manifest_path(root, stage, version, k), {
-                "stage": stage, "version": version, "slice": k,
-                "slice_of": n_slices, "slice_col": slice_col,
-                "sort_cols": sort_cols, "input": input_fingerprint,
-                # recorded so maintenance (compaction) judges runts
-                # against the geometry the stage was encoded with
-                "chunk_rows": chunk_rows or CHUNK_ROWS,
-                "metrics": per_slice[k],
-            }, store=store)
-
-    results: list[SliceResult] = []
-    for k in range(n_slices):
-        if k in done:
-            results.append(SliceResult(k, True, done[k]))
-        else:
-            results.append(SliceResult(k, False, per_slice[k]))
-    return results
+    # chunk_rows is recorded so maintenance (compaction) judges runts
+    # against the geometry the stage was encoded with
+    lineage = {"slice_col": slice_col, "sort_cols": sort_cols,
+               "input": input_fingerprint, "chunk_rows": chunk_rows}
+    return commit_slices(spark, root, stage, version, n_slices, done, todo,
+                         elapsed_s, lineage, store)
 
 
 def read_chunks(spark: SparkSession, root: str, stage: str, version: int) -> DataFrame:

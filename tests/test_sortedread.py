@@ -377,3 +377,40 @@ def test_read_sorted_hot_key_splits_across_ranges(spark):
     # full content parity
     assert (out.drop("range_id").exceptAll(d).count() == 0
             and d.exceptAll(out.drop("range_id")).count() == 0)
+
+
+def test_plan_tiebreak_cuts_driver_equals_distributed(spark):
+    """With tiebreak=True the driver walk takes each bucket's first
+    chunk in (key_min, tiebreak) order and the distributed path takes
+    the min (key_min, tiebreak) struct per bucket; on a corpus where
+    every key_min is shared by ten chunks both must pick the same
+    composite cuts, and some cut must split a shared key."""
+    n = 100_000
+    zf = spark.range(n).select(
+        F.col("id").cast("int").alias("part_id"),
+        F.lit(0).cast("int").alias("chunk_seq"),
+        F.format_string("k%06d", (F.col("id") / 10).cast("long"))
+        .alias("key_min"),
+        F.format_string("k%06d", (F.col("id") / 10).cast("long"))
+        .alias("key_max"),
+        (F.when(F.col("id") % 1000 == 0, 5000).otherwise(10))
+        .cast("long").alias("n_rows"),
+        F.lit('{"key_nulls":0}').alias("params"))
+
+    dist = plan_key_ranges(zf, 64, tiebreak=True)
+    drv = plan_key_ranges(zf, 64, tiebreak=True,
+                          plan_collect_threshold=2 * n)
+    assert len(dist) > 32
+    assert drv == dist
+    cuts = [r[1] for r in dist[:-1]]
+    assert all(isinstance(c, tuple) and len(c) == 2 for c in cuts)
+    assert cuts == sorted(set(cuts))
+    # a cut whose tiebreak is above its key's smallest one splits that
+    # key's chunks across two ranges
+    min_tb = {
+        r["key_min"]: r["tb"] for r in
+        zf.filter(F.col("key_min").isin([k for k, _ in cuts]))
+        .groupBy("key_min")
+        .agg(F.min(F.xxhash64("part_id", "chunk_seq")).alias("tb"))
+        .collect()}
+    assert any(tb > min_tb[k] for k, tb in cuts)
